@@ -15,12 +15,15 @@ implements the documented parquet fallback behind the same interface:
 - the lineage row for a bucket is written AFTER its data lands (write
   ordering = commit protocol: a bucket is committed iff its lineage
   row exists and round-trips the checksum);
-- resume = anti-join (operator J6) of the input's buckets against
-  committed lineage buckets — only missing buckets recompute, and
-  partition pruning keeps committed buckets unread.
+- resume = a driver-side anti-join (operator J6) of the bucket domain
+  against the committed lineage rows.  ``uncommitted`` turns the
+  missing buckets into a row filter the caller applies BELOW any
+  opaque Python stage (the tagger's ``mapInPandas``), because Spark
+  cannot push a filter through it; a stage whose buckets are all
+  committed writes nothing and is returned as its committed read-back.
 
-Bucketing is ``pmod(xxhash64(conv_id), n_buckets)`` — a pure function
-of the row, stable under retries and repartitioning.
+Bucketing is ``pmod(xxhash64(conv_id), n_buckets)`` (``bucket_col``) —
+a pure function of the row, stable under retries and repartitioning.
 """
 
 from __future__ import annotations
@@ -29,20 +32,42 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 N_BUCKETS = 32
 LINEAGE_TABLE = "_lineage"
 
 
+def bucket_col(n_buckets: int = N_BUCKETS) -> Column:
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
-    return df.withColumn(
-        "part", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("part", bucket_col(n_buckets))
 
 
 def _lineage_dir(root: str, stage: str) -> str:
     return os.path.join(root, LINEAGE_TABLE, stage)
+
+
+def _lineage_files(root: str, stage: str) -> list[tuple[str, dict]]:
+    """(path, record) of every committed lineage row of ``stage``."""
+    d = _lineage_dir(root, stage)
+    if not os.path.isdir(d):
+        return []
+    out = []
+    for fn in sorted(os.listdir(d)):
+        if fn.endswith(".json"):
+            path = os.path.join(d, fn)
+            with open(path) as f:
+                out.append((path, json.load(f)))
+    return out
+
+
+def lineage_records(root: str, stage: str) -> list[dict]:
+    """Lineage rows of ``stage`` (stage, part, n_buckets, input_rows,
+    output_rows, checksum, committed_at), as validation reads them."""
+    return [rec for _path, rec in _lineage_files(root, stage)]
 
 
 def committed_buckets(
@@ -58,35 +83,22 @@ def committed_buckets(
     bucket written at a different n_buckets holds different rows for
     the same id (pmod(h, 64) == 3 is not pmod(h, 8) == 3), so a domain
     change invalidates every prior bucket."""
-    d = _lineage_dir(root, stage)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for fn in sorted(os.listdir(d)):
-        if fn.endswith(".json"):
-            with open(os.path.join(d, fn)) as f:
-                rec = json.load(f)
-            if n_buckets is not None and rec.get("n_buckets") != n_buckets:
-                continue
-            out.append(int(rec["part"]))
-    return out
+    return [
+        int(rec["part"])
+        for rec in lineage_records(root, stage)
+        if n_buckets is None or rec.get("n_buckets") == n_buckets
+    ]
 
 
-def read_lineage(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    """Lineage as a DataFrame (stage, part, input_rows, output_rows,
-    checksum, committed_at) — the J6 anti-join side."""
-    d = _lineage_dir(root, stage)
-    recs = []
-    if os.path.isdir(d):
-        for fn in sorted(os.listdir(d)):
-            if fn.endswith(".json"):
-                with open(os.path.join(d, fn)) as f:
-                    recs.append(json.load(f))
-    return spark.createDataFrame(
-        recs or [],
-        "stage string, part int, input_rows long, output_rows long, "
-        "checksum long, committed_at double",
-    )
+def uncommitted(
+    df: DataFrame, root: str, stage: str, n_buckets: int = N_BUCKETS
+) -> DataFrame:
+    """``df`` restricted to the rows whose bucket has no committed
+    lineage row for ``stage`` — the rows ``commit_stage`` would write.
+    Apply it before any stage Spark cannot see through, so committed
+    buckets never reach it."""
+    done = sorted(committed_buckets(None, root, stage, n_buckets=n_buckets))
+    return df.filter(~bucket_col(n_buckets).isin(done)) if done else df
 
 
 def _drop_stale_partitions(
@@ -110,15 +122,9 @@ def _drop_stale_partitions(
                 pid = -1
             if pid not in valid or pid not in keep:
                 shutil.rmtree(os.path.join(data_dir, entry))
-    ldir = _lineage_dir(root, stage)
-    if os.path.isdir(ldir):
-        for fn in os.listdir(ldir):
-            if not fn.endswith(".json"):
-                continue
-            with open(os.path.join(ldir, fn)) as f:
-                rec = json.load(f)
-            if int(rec["part"]) not in keep:
-                os.remove(os.path.join(ldir, fn))
+    for path, rec in _lineage_files(root, stage):
+        if int(rec["part"]) not in keep:
+            os.remove(path)
 
 
 def commit_stage(
@@ -130,6 +136,7 @@ def commit_stage(
 ) -> DataFrame:
     """Write ``df`` (must contain conv_id) partition-aligned with
     per-bucket lineage; on resume, skip already-committed buckets.
+    When every bucket is committed, nothing is computed or written.
 
     Returns the full committed stage output (read back — committed
     buckets included), so downstream stages always see the complete
@@ -146,6 +153,7 @@ def commit_stage(
         if resume
         else set()
     )
+    todo = valid - done
     # Drop stale on-disk state BEFORE writing: dynamic overwrite only
     # replaces partitions present in this run's output, so a leftover
     # ``part=k`` dir from a prior run (different n_buckets, or a torn
@@ -156,64 +164,67 @@ def commit_stage(
     # committed buckets are exactly ``done``.
     _drop_stale_partitions(root, stage, data_dir, keep=done, valid=valid)
     bucketed = with_bucket(df, n_buckets)
-    todo = bucketed.filter(~F.col("part").isin(sorted(done))) if done else bucketed
 
-    # Write FIRST (the only pass over the recomputed stage), then
-    # compute counters + checksum from the files just written: each
-    # stage executes exactly once, and the lineage checksum describes
-    # the bytes on disk — the same execution validate_stage will
-    # re-checksum (round 1 computed stats and data in two separate
-    # actions: 2× compute, and any upstream non-determinism could
-    # desync checksum from data).  Partition pruning keeps the
-    # stats scan to the recomputed buckets.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    todo.write.partitionBy("part").mode("overwrite").parquet(data_dir)
-    # Stats over EXACTLY the buckets this commit computed — a positive
-    # filter on (valid − done), not merely "everything not committed",
-    # so nothing outside this run's write set can earn a lineage row.
-    written = spark.read.parquet(data_dir).filter(
-        F.col("part").isin(sorted(valid - done))
-    )
-    stats = (
-        written.groupBy("part")
-        .agg(
-            F.count("*").alias("output_rows"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64(*[c for c in df.columns])), F.lit(0)
-            ).alias("checksum"),
+    if todo:
+        # Write FIRST (the only pass over the recomputed stage), then
+        # compute counters + checksum from the files just written: each
+        # stage executes exactly once, and the lineage checksum
+        # describes the bytes on disk — the same execution
+        # validate_stage will re-checksum.  Partition pruning keeps the
+        # stats scan to the recomputed buckets.
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        bucketed.filter(F.col("part").isin(sorted(todo))).write.partitionBy(
+            "part"
+        ).mode("overwrite").parquet(data_dir)
+        # Stats over EXACTLY the buckets this commit computed, so
+        # nothing outside this run's write set can earn a lineage row.
+        written = spark.read.parquet(data_dir).filter(
+            F.col("part").isin(sorted(todo))
         )
-        .collect()
-    )
+        stats = (
+            written.groupBy("part")
+            .agg(
+                F.count("*").alias("output_rows"),
+                F.coalesce(
+                    F.bit_xor(F.xxhash64(*df.columns)), F.lit(0)
+                ).alias("checksum"),
+            )
+            .collect()
+        )
 
-    os.makedirs(_lineage_dir(root, stage), exist_ok=True)
-    for r in stats:
-        rec = {
-            "stage": stage,
-            "part": int(r["part"]),
-            "n_buckets": n_buckets,
-            "input_rows": int(r["output_rows"]),
-            "output_rows": int(r["output_rows"]),
-            "checksum": int(r["checksum"]),
-            "committed_at": time.time(),
-        }
-        path = os.path.join(_lineage_dir(root, stage), f"part-{rec['part']:05d}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, path)  # atomic rename = the commit point
+        os.makedirs(_lineage_dir(root, stage), exist_ok=True)
+        for r in stats:
+            rec = {
+                "stage": stage,
+                "part": int(r["part"]),
+                "n_buckets": n_buckets,
+                "input_rows": int(r["output_rows"]),
+                "output_rows": int(r["output_rows"]),
+                "checksum": int(r["checksum"]),
+                "committed_at": time.time(),
+            }
+            path = os.path.join(
+                _lineage_dir(root, stage), f"part-{rec['part']:05d}.json"
+            )
+            tmp = path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(rec, f)
+            os.replace(tmp, path)  # atomic rename = the commit point
 
     # Snapshot manifest LAST — it must only ever describe a fully
     # committed table state (S2's snapshot-pinned read contract,
     # checkpoint/snapshots.py).  Passing the written-bucket set makes
     # the manifest incremental: untouched buckets inherit the parent
-    # manifest's files instead of rescanning the directory.
+    # manifest's files instead of rescanning the directory.  With
+    # nothing written this is a filesystem-only call that creates no
+    # snapshot, unless an earlier run crashed before its manifest.
     from ner_spark.checkpoint.snapshots import record_snapshot
 
     record_snapshot(
         root,
         stage,
         n_buckets,
-        written_buckets=valid - done,
+        written_buckets=todo,
         schema_json=bucketed.schema.json(),
     )
 
@@ -276,32 +287,37 @@ def resume_contract_violations(spark: SparkSession) -> int:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def validate_stage(spark: SparkSession, root: str, stage: str) -> bool:
+def validate_stage(
+    spark: SparkSession,
+    root: str,
+    stage: str,
+    totals: dict[str, int] | None = None,
+) -> bool:
     """Re-checksum committed data against lineage (detects torn
-    writes: data without lineage is recomputed, lineage without data
-    fails validation)."""
+    writes: data without lineage, lineage without data, or a bucket
+    whose row count or checksum differs from its lineage row).
+
+    One aggregate job (at most n_buckets rows back), compared with the
+    JSON lineage rows on the driver.  When ``totals`` is given, the
+    stage's row count from that aggregate is stored under ``stage``."""
+    expected = {
+        int(rec["part"]): (int(rec["output_rows"]), int(rec["checksum"]))
+        for rec in lineage_records(root, stage)
+    }
     data_dir = os.path.join(root, stage)
-    if not os.path.isdir(data_dir):
-        return not committed_buckets(spark, root, stage)
-    lineage = read_lineage(spark, root, stage).alias("l")
-    cols = [
-        c for c in spark.read.parquet(data_dir).columns if c != "part"
-    ]
-    actual = (
-        spark.read.parquet(data_dir)
-        .groupBy("part")
-        .agg(
-            F.count("*").alias("rows"),
-            F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("cs"),
-        )
-        .alias("a")
-    )
-    bad = actual.join(
-        lineage, F.col("a.part") == F.col("l.part"), "full"
-    ).filter(
-        F.col("a.part").isNull()
-        | F.col("l.part").isNull()
-        | (F.col("a.cs") != F.col("l.checksum"))
-        | (F.col("a.rows") != F.col("l.output_rows"))
-    )
-    return bad.count() == 0
+    actual: dict[int, tuple[int, int]] = {}
+    if os.path.isdir(data_dir):
+        data = spark.read.parquet(data_dir)
+        cols = [c for c in data.columns if c != "part"]
+        actual = {
+            int(r["part"]): (int(r["rows"]), int(r["cs"]))
+            for r in data.groupBy("part")
+            .agg(
+                F.count("*").alias("rows"),
+                F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("cs"),
+            )
+            .collect()
+        }
+    if totals is not None:
+        totals[stage] = sum(rows for rows, _cs in actual.values())
+    return actual == expected

@@ -308,8 +308,8 @@ def read_snapshot(
 
         return spark.createDataFrame([], TRANSCRIPT_SCHEMA)
     # basePath keeps the hive `part=` column, exactly like the plain
-    # directory read the un-pinned fallback does — so resume-side
-    # partition pruning on `part` still applies to pinned reads.
+    # directory read the un-pinned fallback does — so a filter on
+    # `part` still prunes partitions of a pinned read.
     return spark.read.option("basePath", data_dir).parquet(*paths)
 
 

@@ -45,8 +45,9 @@ def read_transcripts(
     Production: Iceberg with ``option("snapshot-id", ...)`` for pinned
     reads (operator S2); the Iceberg runtime jar is not available in
     the sandbox (no network — SURVEY.md §0), so this transparently
-    falls back to the parquet layout, which is partitioned by
-    ``part=pmod(xxhash64(conv_id), N)`` so resume reads prune.
+    falls back to the parquet layout (a plain directory, or a stage
+    written by ``commit_stage`` under ``part=pmod(xxhash64(conv_id), N)``
+    dirs).
 
     The fallback HONORS ``snapshot_id`` when the path was written by
     ``commit_stage`` (checkpoint/snapshots.py records a JSON manifest
@@ -100,7 +101,7 @@ def read_transcripts(
                 "Iceberg catalog is configured"
             )
         # Plain-parquet fallback; `part=` hive-style dirs surface as a
-        # column and drive partition pruning on resume (J6 path).
+        # column.
         return spark.read.parquet(path)
 
 

@@ -1,20 +1,22 @@
 """Distributed mention tagger — the engine's stage 4 (SURVEY.md §3.2).
 
-``tag_mentions`` is the one entry point: transcripts DataFrame →
-mentions DataFrame.  The Python boundary is a single iterator-form
-``mapInPandas`` (operator U2): weights are deserialized from the
-broadcast ONCE per task, every Arrow batch is tagged with the batched
-numpy BiLSTM-CRF (C2–C8 fused), and one output row is emitted per
-mention.  No per-row Python anywhere (BASELINE.json:15).
+``tag_turns`` is the Python boundary: transcripts DataFrame → one row
+per turn (``TURN_SCHEMA``: conv_id, turn_idx, text, span array).  It
+is a single iterator-form ``mapInPandas`` (operator U2): model weights
+load once per Python worker, and every Arrow batch is tagged with the
+batched numpy BiLSTM-CRF (C2–C8 fused).  ``mentions_from_turns``
+explodes the span arrays into one row per mention outside Python, and
+``tag_mentions`` composes the two.  No per-row Python anywhere
+(BASELINE.json:15).
 
 Scale design:
-- layout: ``repartition(N, salt(conv_id))`` then
-  ``sortWithinPartitions(conv_id, turn_idx)`` — the O2 ordering
-  invariant; salting splits hot conversations (safe: tagging is
-  per-turn) via ner_spark.kg.skew.
-- the UDF emits a narrow schema (no ``text``) so the biggest column
-  dies at the tagger boundary (column pruning can't see through a
-  UDF, so we prune by hand).
+- layout: ``repartition(N, conv_id)`` — or the two-pass salting of
+  ner_spark.kg.skew with ``salt_hot=True`` — then
+  ``sortWithinPartitions(conv_id, turn_idx)``, the O2 ordering
+  invariant;
+- the turn row keeps ``text``: co-occurrence triples read the
+  inter-span text from it, so both downstream shapes derive without
+  a join back to the transcripts;
 - mention_id = xxhash64(conv_id, turn_idx, start, end) — a pure
   function of data, stable under retries/partitioning (never
   monotonically_increasing_id).

@@ -104,10 +104,16 @@ def main(argv: list[str] | None = None) -> None:
         spark-submit --py-files ner_spark.zip -m ner_spark.pipeline \\
             --input <transcripts path-or-iceberg-table> \\
             --root <output root> [--stage all|tag|triples] \\
-            [--from-checkpoint auto] [--mode model|gazetteer]
+            [--from-checkpoint auto] [--mode model|gazetteer] [--no-resume]
 
-    Resumable by default: committed buckets are skipped
-    (checkpoint/resume.py); pass --no-resume to recompute everything.
+    ``--stage tag`` commits tagged_turns and mentions; ``triples`` and
+    ``all`` also commit triples (``all`` does not reach linking, CC or
+    materialize yet).  Resumable by default: only buckets without a
+    committed lineage row are computed (checkpoint/resume.py);
+    ``--from-checkpoint auto`` is the only checkpoint source.
+    ``--no-resume`` recomputes and rewrites every bucket.  Prints the
+    committed row counts and per-stage validation, both from one
+    validation aggregate per stage.
     """
     import argparse
 
@@ -118,17 +124,24 @@ def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--root", required=True)
-    ap.add_argument("--stage", default="all")
+    ap.add_argument("--stage", default="all", choices=["all", "tag", "triples"])
     ap.add_argument("--mode", default="model")
-    ap.add_argument("--from-checkpoint", default="auto")
+    ap.add_argument("--from-checkpoint", default="auto", choices=["auto"])
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args(argv)
 
     spark = SparkSession.getActiveSession() or get_spark("ner_spark-pipeline")
     transcripts = read_transcripts(spark, args.input)
-    out = run_resumable(spark, transcripts, args.root, mode=args.mode)
-    counts = {k: v.count() for k, v in out.items()}
-    ok = validate_all(spark, args.root)
+    out = run_resumable(
+        spark,
+        transcripts,
+        args.root,
+        mode=args.mode,
+        triples=args.stage != "tag",
+        resume=not args.no_resume,
+    )
+    counts: dict[str, int] = {}
+    ok = validate_all(spark, args.root, tuple(out), counts)
     print({"counts": counts, "validated": ok})
 
 

@@ -10,9 +10,17 @@ import shutil
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
-from ner_spark.checkpoint.lineage import committed_buckets, read_lineage, validate_stage
-from ner_spark.checkpoint.resume import run_resumable, validate_all
+from ner_spark.checkpoint.lineage import (
+    LINEAGE_TABLE,
+    committed_buckets,
+    lineage_records,
+    validate_stage,
+    with_bucket,
+)
+from ner_spark.checkpoint.resume import STAGES, run_resumable, validate_all
+from ner_spark.checkpoint.snapshots import snapshots
 from ner_spark.fixtures.transcripts import transcripts_df
 
 N_CONVS = 60
@@ -37,10 +45,10 @@ def test_full_run_then_noop_resume(spark, root):
         "mentions": True,
         "triples": True,
     }
-    lineage_before = read_lineage(spark, root, "triples").toPandas()
+    lineage_before = pd.DataFrame(lineage_records(root, "triples"))
     again = _triples_pdf(run_resumable(spark, t, root, mode="gazetteer"))
     pd.testing.assert_frame_equal(first, again)
-    lineage_after = read_lineage(spark, root, "triples").toPandas()
+    lineage_after = pd.DataFrame(lineage_records(root, "triples"))
     # no bucket recommitted on the no-op resume
     pd.testing.assert_frame_equal(
         lineage_before.sort_values("part").reset_index(drop=True)[
@@ -80,6 +88,47 @@ def test_partial_failure_resume(spark, root):
     assert validate_stage(spark, root, "triples")
 
 
+def _table_sigs(out) -> dict:
+    """(rows, bit_xor of row hashes) of each committed table."""
+    return {
+        k: tuple(
+            df.agg(
+                F.count("*"),
+                F.coalesce(F.bit_xor(F.xxhash64(*df.columns)), F.lit(0)),
+            ).collect()[0]
+        )
+        for k, df in out.items()
+    }
+
+
+def test_resume_tags_only_lost_buckets(spark, root, tagger_rows):
+    """Committed buckets are filtered out BEFORE the tagger: the cold
+    run tags every row, a resume after losing bucket k's lineage tags
+    exactly bucket k's rows, and a no-op rerun tags none and records no
+    snapshot — while every resumed table equals the cold one."""
+    t = transcripts_df(spark, N_CONVS)
+    n_rows = t.count()
+    cold = _table_sigs(run_resumable(spark, t, root, mode="gazetteer"))
+    assert tagger_rows.value == n_rows
+
+    k = committed_buckets(None, root, "tagged_turns")[0]
+    for stage in STAGES:
+        os.remove(os.path.join(root, LINEAGE_TABLE, stage, f"part-{k:05d}.json"))
+    n_k = with_bucket(t, 8).filter(F.col("part") == k).count()
+    tagger_rows.value = 0
+    resumed = _table_sigs(run_resumable(spark, t, root, mode="gazetteer"))
+    assert tagger_rows.value == n_k > 0
+    assert resumed == cold
+    assert all(validate_all(spark, root).values())
+
+    n_snaps = {s: len(snapshots(root, s)) for s in STAGES}
+    tagger_rows.value = 0
+    noop = _table_sigs(run_resumable(spark, t, root, mode="gazetteer"))
+    assert tagger_rows.value == 0
+    assert {s: len(snapshots(root, s)) for s in STAGES} == n_snaps
+    assert noop == cold
+
+
 def test_commit_stage_computes_input_once(spark, root):
     """The stage body must execute exactly ONE time per commit (round
     1 ran it twice: a stats action then the write).  Counted with an
@@ -110,8 +159,6 @@ def test_stale_partitions_not_recommitted(spark, root):
     bucket domain can't produce k) must not be swept into the commit's
     read-back stats and blessed with lineage they never earned; same
     for an uncommitted torn-write dir inside the domain."""
-    from pyspark.sql import functions as F
-
     from ner_spark.checkpoint.lineage import commit_stage
 
     t = transcripts_df(spark, 20).select("conv_id", "turn_idx", "text")
@@ -142,8 +189,8 @@ def test_stale_partitions_not_recommitted(spark, root):
     ]
     assert not left, left
     # stored lineage counts cover the whole input exactly once
-    lin = read_lineage(spark, root, "probe")
-    assert lin.agg(F.sum("output_rows")).collect()[0][0] == t.count()
+    lin = lineage_records(root, "probe")
+    assert sum(r["output_rows"] for r in lin) == t.count()
 
 
 def test_duplicate_input_rows_dedup(spark, root):
